@@ -70,20 +70,34 @@ class PartitionManifest:
 # the verifier (compute_digest) must agree bit for bit or every
 # resume/verify comparison breaks.
 _ROW_DIGEST_SQL = (
-    "cast(conv(substring(md5(to_json(struct(*))), 1, 15), 16, 10) as bigint)"
+    "cast(conv(substring(md5(to_json(struct({cols}))), 1, 15), 16, 10) as bigint)"
 )
 
 
-def row_digest_col():
+def row_digest_col(*cols: str):
     """60-bit row hash over the canonical JSON of all columns of whatever
-    frame the expression is attached to."""
-    return F.expr(_ROW_DIGEST_SQL)
+    frame the expression is attached to, or of just ``cols`` when given
+    (same hash as over a frame selected down to ``cols``)."""
+    inner = ", ".join(f"`{c}`" for c in cols) if cols else "*"
+    return F.expr(_ROW_DIGEST_SQL.format(cols=inner))
 
 
 CELL_COL_CANDIDATES = ("cell", "tile_id", "__cell")
 
 
 _SUM_MASK = (1 << 30) - 1  # see PartitionManifest.value_sum
+
+
+def digest_aggs(rd: str) -> list:
+    """Aggregates ``n`` (row count), ``d`` (xor digest) and ``s`` (masked
+    sum) over the row-hash column ``rd`` — the order-independent
+    (row_count, value_digest, value_sum) triple, one map-side combinable
+    pass."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.expr(f"bit_xor({rd})").alias("d"),
+        F.expr(f"sum({rd} & {_SUM_MASK})").alias("s"),
+    ]
 
 
 def compute_digest(df: DataFrame) -> tuple[int, int]:
@@ -101,11 +115,7 @@ def compute_stats(df: DataFrame) -> dict:
     # attach the row hash ONCE; struct(*) expands to df's own columns at
     # analysis time of this projection, so __rd never hashes itself
     d = df.withColumn("__rd", row_digest_col())
-    aggs = [
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(__rd)").alias("d"),
-        F.expr(f"sum(__rd & {_SUM_MASK})").alias("s"),
-    ]
+    aggs = digest_aggs("__rd")
     cell = next((c for c in CELL_COL_CANDIDATES if c in df.columns), None)
     if cell:
         aggs += [F.min(cell).alias("cmin"), F.max(cell).alias("cmax")]

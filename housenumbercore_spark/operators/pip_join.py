@@ -9,7 +9,12 @@ set-based plan over all areas at once:
 1. **Cover** every admin polygon with grid cells at a join resolution
    (superset cover from the polygon's bbox, pruned to cells whose rectangle
    actually intersects the polygon). Distributed ``mapInPandas`` over the
-   dimension; output is the narrow ``(cell, area_id)`` build side.
+   dimension; output is the narrow ``(cell, area_id)`` build side. The
+   cover is built ONCE per areas version and resolution: it is memoized,
+   pinned, under a content digest of the dimension's (id, wkb) rows, so
+   the per-municipality job loop re-running the join against the same
+   admin polygons pays one small dimension aggregate per call and no
+   Python (see :func:`cover_cells`).
 2. **Encode** every point's cell as pure column arithmetic (whole-stage
    codegen — zero Python on the fact path).
 3. **Equi-join** fact.cell == dim.cell. The dimension side is broadcast by
@@ -17,10 +22,9 @@ set-based plan over all areas at once:
    64 MB broadcast threshold), so the 10¹²-row fact side is *never
    shuffled*. For dims too large to broadcast, :func:`salted_cell_join`
    provides a shuffle join with hot-cell salting.
-4. **Refine** candidates with the exact vectorized predicate
-   (covers/contains, geo.geometry) inside an Arrow-batched ``mapInPandas``;
-   polygons reach executors once via an explicit SparkContext broadcast,
-   not per-row payload duplication.
+4. **Refine** candidates exactly (covers/contains) with a pure codegen
+   expression over the cover's per-cell edge payload
+   (:func:`jvm_refine_expr`) — zero Python on the fact path.
 
 Scale notes (100 TB / 1000 executors): the only wide operation in the whole
 plan is whatever aggregation the caller adds afterwards; candidates stream
@@ -31,14 +35,20 @@ missed; the refine is exact.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..checkpoint import digest_aggs, row_digest_col
 from ..geo import cells as C
 from ..geo import geometry as G
+from ..pinning import pin
 
 # dunder-reserved refine-payload columns produced by cover_cells and
 # consumed by jvm_refine_expr / seg_crossing_expr (reserved like __cell:
@@ -47,8 +57,6 @@ REFINE_COLS = (
     "__pj_full", "__pj_ref_x", "__pj_ref_y", "__pj_ref_inside", "__pj_edges"
 )
 
-import os
-
 # Cover granularity trades boundary-cell share (finer → fewer refine
 # rows) against broadcast-map size (finer → slower hash probes). Measured
 # on the sf0.1 flagship: 256 cells/area beats 1024 by ~35% wall — probe
@@ -56,17 +64,29 @@ import os
 COVER_MAX_CELLS_PER_AREA = int(os.environ.get("SPARK_GRAFT_COVER_CELLS", "256"))
 
 
-def pick_join_res(areas: DataFrame, bbox_cols=("xmin", "ymin", "xmax", "ymax"),
-                  max_cells: int = COVER_MAX_CELLS_PER_AREA, finest: int = 13) -> int:
-    """One fixed join resolution for the whole dim: the finest res whose
-    cover of the *median-sized* area stays under ``max_cells``. Single tiny
-    aggregate on the dimension — not the fact table."""
+BBOX_COLS = ("xmin", "ymin", "xmax", "ymax")
+
+# Cover memo: key (applicationId, row count, xor digest, masked-sum digest
+# of the dimension's (id, wkb) rows, res, id_col, wkb_col, id type) →
+# pinned cover frame, least recently used first. A handful of areas
+# versions is the working set of any job loop; evicted frames' blocks are
+# freed by the ContextCleaner.
+_COVER_MEMO: OrderedDict = OrderedDict()
+_COVER_MEMO_LOCK = threading.Lock()
+_COVER_MEMO_SIZE = 8
+
+
+def _res_aggs(bbox_cols=BBOX_COLS) -> list:
     xmin, ymin, xmax, ymax = bbox_cols
-    row = areas.select(
+    return [
         F.expr(f"percentile({xmax} - {xmin}, 0.5)").alias("w"),
         F.expr(f"percentile({ymax} - {ymin}, 0.5)").alias("h"),
         F.min(xmin).alias("x0"), F.min(ymin).alias("y0"),
-    ).collect()[0]
+    ]
+
+
+def _res_from_stats(row, max_cells: int = COVER_MAX_CELLS_PER_AREA,
+                    finest: int = 13) -> int:
     if row.w is None:
         # empty dimension: any res yields the (empty) join; the coarsest
         # avoids building a pointless fine-grained fact-side cell column
@@ -75,6 +95,15 @@ def pick_join_res(areas: DataFrame, bbox_cols=("xmin", "ymin", "xmax", "ymax"),
         row.x0, row.y0, row.x0 + max(row.w, 1e-9), row.y0 + max(row.h, 1e-9),
         max_cells=max_cells, finest=finest,
     )
+
+
+def pick_join_res(areas: DataFrame, bbox_cols=BBOX_COLS,
+                  max_cells: int = COVER_MAX_CELLS_PER_AREA, finest: int = 13) -> int:
+    """One fixed join resolution for the whole dim: the finest res whose
+    cover of the *median-sized* area stays under ``max_cells``. Single tiny
+    aggregate on the dimension — not the fact table."""
+    row = areas.select(*_res_aggs(bbox_cols)).collect()[0]
+    return _res_from_stats(row, max_cells=max_cells, finest=finest)
 
 
 def _boundary_cells(poly, res: int) -> np.ndarray:
@@ -174,7 +203,65 @@ def cover_cells(
     Scale note: the dim explodes to ≈ cover_cells × (1 + edges/cell) narrow
     rows; for dims too large to broadcast, use salted_cell_join and the
     same refine expression.
+
+    Memoized: the cover is built once per (applicationId, content digest
+    of ``areas.select(id_col, wkb_col)`` — row count, xor and masked sum of
+    checkpoint.row_digest_col —, ``res``, ``id_col``, ``wkb_col``, id
+    type) and returned pinned (``pinning.pin(truncate=True)``: a
+    localCheckpoint, or a durable checkpoint under the ``reliable``
+    strategy — never a CacheManager entry a ``clearCache()`` could drop).
+    Each call runs one small aggregate over the dimension for the digest;
+    a hit runs no Python. Rewriting the areas (same path, one vertex
+    moved) changes the digest and so rebuilds. The build holds a lock, so
+    concurrent callers build once, and is tagged with a Spark job
+    description naming ``pip_join.cover_cells``, the res and the digest.
+    Entries of other applications are dropped; the memo keeps the few
+    most recently used areas versions.
     """
+    return _memo_cover(areas, res, id_col, wkb_col)[1]
+
+
+def _memo_cover(
+    areas: DataFrame, res: int | None, id_col: str, wkb_col: str
+) -> tuple[int, DataFrame]:
+    """(res, pinned memoized cover). A ``res`` of None is picked as
+    :func:`pick_join_res` does, in the same dimension aggregate as the
+    digest."""
+    d = areas.withColumn("__pj_rd", row_digest_col(id_col, wkb_col))
+    aggs = digest_aggs("__pj_rd") + (_res_aggs() if res is None else [])
+    st = d.select(*aggs).collect()[0]
+    if res is None:
+        res = _res_from_stats(st)
+    sc = areas.sparkSession.sparkContext
+    app = sc.applicationId
+    key = (app, st.n, st.d, st.s, res, id_col, wkb_col,
+           areas.schema[id_col].dataType.simpleString())
+    with _COVER_MEMO_LOCK:
+        dim = _COVER_MEMO.get(key)
+        if dim is not None:
+            _COVER_MEMO.move_to_end(key)
+            return res, dim
+        for k in [k for k in _COVER_MEMO if k[0] != app]:
+            del _COVER_MEMO[k]
+        # the build's jobs say what they are in the event log; nested
+        # under the caller's own description when it has one
+        prev = sc.getLocalProperty("spark.job.description")
+        desc = f"cover build: pip_join.cover_cells res={res} digest={st.n}:{st.d}:{st.s}"
+        sc.setJobDescription(f"{prev} / {desc}" if prev else desc)
+        try:
+            dim = pin(_cover_plan(areas, res, id_col, wkb_col), truncate=True)
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+        _COVER_MEMO[key] = dim
+        while len(_COVER_MEMO) > _COVER_MEMO_SIZE:
+            _COVER_MEMO.popitem(last=False)
+        return res, dim
+
+
+def _cover_plan(
+    areas: DataFrame, res: int, id_col: str, wkb_col: str
+) -> DataFrame:
+    """The unpinned cover build behind :func:`cover_cells`."""
     out_schema = T.StructType(
         [
             T.StructField("cell", T.LongType(), False),
@@ -325,8 +412,8 @@ def seg_crossing_expr(
     expression: true iff segment (x0,y0)-(x1,y1) properly crosses OR touches
     any edge in the cell's ``edges`` payload. Exactly mirrors the vectorized
     kernel geo.geometry._segments_intersect (orientation signs + collinear
-    bbox touch), so the JVM street refine matches the python path bit for
-    bit. Replaces the reference's per-municipality ST_Contains/ST_Crosses
+    bbox touch), so the JVM street refine matches the kernel bit for bit.
+    Replaces the reference's per-municipality ST_Contains/ST_Crosses
     round-trips (MunicipalityJobs.java:282-304) on the candidate set."""
     # orientation tests; S0/S1 = segment endpoints, E0/E1 = edge endpoints
     d1 = f"((({x1})-({x0}))*(e[1]-({y0})) - (({y1})-({y0}))*(e[0]-({x0})))"
@@ -376,48 +463,6 @@ def seg_cover_cells_cols(
     return d.withColumn(out, cell).drop("__gx", "__gy")
 
 
-def refine_covers(
-    cand: DataFrame,
-    id_col: str = "area_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    predicate: str = "covers",
-    wkb_col: str = "__wkb",
-) -> DataFrame:
-    """Exact point-in-polygon filter on cell-join candidates.
-
-    The polygon WKB rides on each candidate row (``wkb_col`` — attached by
-    a broadcast join against the area dim, so bytes move executor-to-
-    executor once per build, never through a driver collect); parsed
-    geometries are cached per Python worker keyed by area id."""
-    if predicate not in ("covers", "contains"):
-        # same failure shape as jvm_refine_expr for the same user error
-        raise ValueError(f"unknown predicate {predicate!r}")
-    pred_fn = {"covers": G.covers, "contains": G.contains_point}[predicate]
-    out_schema = T.StructType(
-        [f for f in cand.schema.fields if f.name != wkb_col]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def gen(batches):
-        parsed: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[lon].to_numpy(dtype=np.float64)
-            py = pdf[lat].to_numpy(dtype=np.float64)
-            wkbs = pdf[wkb_col].values
-            for aid, idx in pdf.groupby(id_col, sort=False).indices.items():
-                poly = parsed.get(aid)
-                if poly is None:
-                    poly = parsed[aid] = G.parse_wkb(bytes(wkbs[idx[0]]))
-                keep[idx] = pred_fn(poly, px[idx], py[idx])
-            yield pdf.loc[keep, out_cols]
-
-    return cand.mapInPandas(gen, out_schema)
-
-
 def assign_points_to_areas(
     spark,
     points: DataFrame,
@@ -429,28 +474,25 @@ def assign_points_to_areas(
     res: int | None = None,
     predicate: str = "covers",
     exact: bool = True,
-    refine: str = "jvm",
 ) -> DataFrame:
     """points × areas spatial join: one output row per (point, covering area).
 
     Overlapping admin levels produce multiple rows per point by design
     (reference evaluates each area independently; SURVEY.md §7.3).
 
-    ``refine="jvm"`` (default) keeps the exact test inside whole-stage
-    codegen — zero Python on the fact path (measured: the Arrow/IPC hop
-    caps at a few M rows/s per node regardless of cores, so this is the
-    difference between a scaling and a non-scaling plan).
-    ``refine="python"`` routes boundary-cell candidates through the
-    vectorized kernel instead (boundary-inclusive ``covers`` / strict
-    ``contains`` semantics for points exactly ON a polygon boundary).
+    The exact test (boundary-inclusive ``covers`` or strict ``contains``,
+    :func:`jvm_refine_expr`) stays inside whole-stage codegen — zero Python
+    on the fact path (measured: the Arrow/IPC hop caps at a few M rows/s
+    per node regardless of cores, so this is the difference between a
+    scaling and a non-scaling plan). The cover is the memoized one of
+    :func:`cover_cells`; with ``res=None`` the res is picked in the same
+    dimension aggregate as the cover's digest.
 
     ``spark`` is unused (the plan derives everything from the input
     frames); the parameter stays for signature uniformity with the
     session-bound operators every caller already threads a session to.
     """
-    if res is None:
-        res = pick_join_res(areas)
-    dim = cover_cells(areas, res, id_col=id_col, wkb_col=wkb_col)
+    res, dim = _memo_cover(areas, res, id_col, wkb_col)
     refine_cols = list(REFINE_COLS)
     pts = points.withColumn("__cell", C.cell_col(lon, lat, res))
     # internal name for the dim join column — dropping 'cell' by name
@@ -461,24 +503,12 @@ def assign_points_to_areas(
     ).drop("__dim_cell", "__cell")
     if not exact:
         return cand.drop(*refine_cols)
-    if refine == "jvm":
-        # predicate reaches the codegen refine too (a silently-ignored
-        # 'contains' here would return boundary points for BOTH areas
-        # sharing an edge while the caller asked for strict containment)
-        return cand.filter(
-            jvm_refine_expr(lon, lat, predicate=predicate)
-        ).drop(*refine_cols)
-    # python path: interior cells accepted by construction, boundary cells
-    # through the vectorized exact kernel; the polygon WKB reaches the
-    # refine via a broadcast dim join (no driver-side collect)
-    interior = cand.filter(F.col("__pj_full")).drop(*refine_cols)
-    boundary = cand.filter(~F.col("__pj_full")).drop(*refine_cols)
-    wkb_dim = areas.select(id_col, F.col(wkb_col).alias("__wkb"))
-    refined = refine_covers(
-        boundary.join(F.broadcast(wkb_dim), id_col),
-        id_col=id_col, lon=lon, lat=lat, predicate=predicate,
-    )
-    return interior.unionByName(refined)
+    # predicate reaches the codegen refine too (a silently-ignored
+    # 'contains' here would return boundary points for BOTH areas sharing
+    # an edge while the caller asked for strict containment)
+    return cand.filter(
+        jvm_refine_expr(lon, lat, predicate=predicate)
+    ).drop(*refine_cols)
 
 
 def salted_cell_join(

@@ -26,9 +26,7 @@ from pyspark.sql import types as T
 
 from ..geo import cells as C
 from ..geo import geometry as G
-from ..pinning import pin
 from ..sources.streets import HIGHWAY_WHITELIST
-from .pip_join import cover_cells, pick_join_res
 
 
 def streets_in_areas(
@@ -60,17 +58,16 @@ def streets_in_areas(
     """
     from .pip_join import (
         REFINE_COLS,
+        _memo_cover,
         jvm_refine_expr,
         seg_cover_cells_cols,
         seg_crossing_expr,
     )
 
-    if res is None:
-        res = pick_join_res(areas)
-    # pin: the per-polygon Python cover computation feeds TWO broadcast
-    # builds (endpoint join + boundary-only crossing join); without pinning
-    # it would execute twice per call. Mechanism per pinning.py.
-    dim = pin(cover_cells(areas, res))
+    # the memoized cover is already pinned, so it feeds both broadcast
+    # builds (endpoint join + boundary-only crossing join) without
+    # re-running the per-polygon Python
+    res, dim = _memo_cover(areas, res, "area_id", "polygon")
     refine_cols = list(REFINE_COLS)
 
     pts = streets.withColumn("__cell", C.cell_col("x0", "y0", res))

@@ -21,6 +21,7 @@ DataFrame (`repartition(partition_cols)` avoids tiny-file explosions).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def write_partitioned(
@@ -151,6 +152,23 @@ def _fs_rename(fs, src, dst) -> None:
         raise IOError(f"rename failed: {src} -> {dst}")
 
 
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested nullability flag (array ``containsNull``,
+    map ``valueContainsNull``, struct-field ``nullable``) set and field
+    metadata dropped — the shape a parquet read gives any written type."""
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True) for f in dt]
+        )
+    return dt
+
+
 def merge_upsert_partitioned(
     spark: SparkSession,
     path: str,
@@ -265,12 +283,15 @@ def merge_upsert_partitioned(
     if fs0.exists(root0):
         probe = _fs_first_data_file(fs0, root0)
         if probe is not None:
+            # nullability-insensitive: a file read reports every type
+            # fully nullable, nested flags included, so a non-nullable
+            # element in updates is the same type, not a re-typing
             on_disk = {
-                f.name: f.dataType
+                f.name: _as_nullable(f.dataType)
                 for f in spark.read.parquet(probe).schema.fields
             }
             expected = {
-                f.name: f.dataType
+                f.name: _as_nullable(f.dataType)
                 for f in updates.schema.fields
                 if f.name not in partition_cols
             }

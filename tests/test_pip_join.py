@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -158,29 +160,24 @@ def test_jvm_refine_vertex_collinear_degeneracy(spark):
     assert got == want
 
 
-def test_python_refine_matches_jvm_and_is_collect_free(spark, world):
-    """The non-default python refine path must agree with the JVM parity
-    transport and must not collect polygons to the driver (WKB rides the
-    broadcast dim join instead)."""
+def test_jvm_refine_matches_covers_oracle_and_is_collect_free(spark, world):
+    """The codegen refine agrees with the vectorized geo.geometry.covers
+    kernel on every (point, area) pair of the world, and polygons never
+    reach the driver through a collect."""
     import inspect
 
     pts, areas = world
-    a = (
-        PJ.assign_points_to_areas(spark, pts, areas, refine="jvm")
-        .select("point_id", "area_id")
-        .toPandas()
-        .sort_values(["point_id", "area_id"])
-        .reset_index(drop=True)
+    got = set(
+        map(tuple, PJ.assign_points_to_areas(spark, pts, areas)
+            .select("point_id", "area_id").collect())
     )
-    b = (
-        PJ.assign_points_to_areas(spark, pts, areas, refine="python")
-        .select("point_id", "area_id")
-        .toPandas()
-        .sort_values(["point_id", "area_id"])
-        .reset_index(drop=True)
-    )
-    assert a.equals(b)
-    assert ".collect()" not in inspect.getsource(PJ.refine_covers)
+    p = pts.select("point_id", "lon", "lat").toPandas()
+    px, py = p.lon.to_numpy(), p.lat.to_numpy()
+    want = set()
+    for r in areas.select("area_id", "polygon").collect():
+        inside = G.covers(G.parse_wkb(bytes(r.polygon)), px, py)
+        want |= {(int(pid), r.area_id) for pid in p.point_id[inside]}
+    assert got == want
     assert ".collect()" not in inspect.getsource(PJ.assign_points_to_areas)
 
 
@@ -277,9 +274,119 @@ def test_cover_cells_bad_geometry_names_area(spark):
         PJ.cover_cells(areas, 4).collect()
 
 
-def test_refine_python_bad_predicate_value_error(spark, world):
+def test_bad_predicate_value_error(spark, world):
     pts, areas = world
     with pytest.raises(ValueError, match="unknown predicate"):
         PJ.assign_points_to_areas(
-            spark, pts, areas, refine="python", predicate="contians"
+            spark, pts, areas, predicate="contians"
         ).collect()
+
+
+@pytest.fixture
+def cover_builds(monkeypatch):
+    """An empty, test-private cover memo; returns the list of cover builds
+    (their res) made while the test runs."""
+    monkeypatch.setattr(PJ, "_COVER_MEMO", OrderedDict())
+    builds = []
+    build = PJ._cover_plan
+
+    def counting(areas, res, *args):
+        builds.append(res)
+        return build(areas, res, *args)
+
+    monkeypatch.setattr(PJ, "_cover_plan", counting)
+    return builds
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _square_areas(spark, corner):
+    """One area: the square (0,0)-(10,10) with its north-east vertex at
+    ``corner``; the bbox columns stay those of the square."""
+    ring = np.array([[0.0, 0.0], [10.0, 0.0], corner, [0.0, 10.0], [0.0, 0.0]])
+    return spark.createDataFrame(
+        [(7, bytearray(G.polygon_wkb([ring])), 0.0, 0.0, 10.0, 10.0)],
+        "area_id long, polygon binary, xmin double, ymin double, "
+        "xmax double, ymax double",
+    )
+
+
+def test_cover_memo_second_call_is_a_hit(spark, world, cover_builds):
+    _, areas = world
+    res = PJ.pick_join_res(areas)
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        first = PJ.cover_cells(areas, res)
+        # the build's own job description is restored afterwards
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    second = PJ.cover_cells(areas, res)
+    assert cover_builds == [res]
+    assert "MapInPandas" not in _plan(second)
+
+    def rows(df):
+        return sorted(str(tuple(r)) for r in df.collect())
+
+    assert rows(second) == rows(first)
+    # the default-res join shares the same entry
+    PJ.assign_points_to_areas(spark, world[0], areas).count()
+    assert cover_builds == [res]
+    # and the pinned rows are those of an unmemoized build
+    assert rows(second) == rows(PJ._cover_plan(areas, res, "area_id", "polygon"))
+
+
+@pytest.mark.parametrize("strategy", ["local", "persist", "reliable"])
+def test_cover_memo_rebuilds_when_areas_rewritten(
+    spark, cover_builds, strategy, tmp_path
+):
+    """Rewriting the areas parquet in place with one vertex moved must
+    rebuild the cover (a stale cover would keep the old assignment), under
+    every pin strategy; a persist-strategy clearCache() between calls must
+    not leave the memoized cover unpinned."""
+    from conftest import forced_pin_strategy
+
+    if strategy == "reliable" and spark.sparkContext.getCheckpointDir() is None:
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    path = str(tmp_path / "areas.parquet")
+    pts = spark.createDataFrame(
+        [(1, 5.0, 5.0), (2, 10.5, 9.5)], "point_id long, lon double, lat double"
+    )
+
+    def assigned():
+        areas = spark.read.parquet(path)
+        out = PJ.assign_points_to_areas(spark, pts, areas)
+        assert "MapInPandas" not in _plan(out)
+        return sorted(r.point_id for r in out.collect())
+
+    with forced_pin_strategy(spark, strategy):
+        _square_areas(spark, [10.0, 10.0]).write.mode("overwrite").parquet(path)
+        assert assigned() == [1]
+        if strategy == "persist":
+            spark.catalog.clearCache()
+        assert assigned() == [1]
+        assert len(cover_builds) == 1
+        # (10.5, 9.5) lies inside once the corner moves to (12, 12)
+        _square_areas(spark, [12.0, 12.0]).write.mode("overwrite").parquet(path)
+        assert assigned() == [1, 2]
+        assert len(cover_builds) == 2
+
+
+def test_cover_memo_concurrent_callers_build_once(spark, cover_builds):
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    areas = _square_areas(spark, [10.0, 10.0])
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(4) as ex:
+            futures = [ex.submit(PJ.cover_cells, areas, 5) for _ in range(4)]
+            covers = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert cover_builds == [5]
+    assert all(c is covers[0] for c in covers)

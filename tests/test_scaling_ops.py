@@ -47,16 +47,10 @@ def test_replicated_corpus_pairs_are_linear_in_rep(spark, sops):
     base_pairs = TD.minhash_dedup_pairs(base).collect()
     rep_pairs = sops._minhash_job(spark).collect()
 
-    # (b) linear in REP within the harness's own tolerance: the word
-    # mapping preserves TRUE Jaccard exactly, but LSH recall on borderline
-    # pairs is stochastic in the hash draw of the renamed strings
-    # (scaling_ops.py docstring: ~5% below REP x base at REP=768), so
-    # exact set equality is NOT a promised property — a drift beyond 10%
-    # is (it would mean the suffix folded away or the workload changed)
+    # (b) exactly linear in REP — the same promise as (a): each replica
+    # reproduces the base pair set, so the total is REP x base
     assert len(base_pairs) > 0
-    lo = 0.9 * sops.REP_DOCS * len(base_pairs)
-    hi = 1.1 * sops.REP_DOCS * len(base_pairs)
-    assert lo <= len(rep_pairs) <= hi, (
+    assert len(rep_pairs) == sops.REP_DOCS * len(base_pairs), (
         f"{len(rep_pairs)} pairs vs base {len(base_pairs)} x REP "
         f"{sops.REP_DOCS}: replication is no longer workload-linear"
     )

@@ -516,3 +516,46 @@ def test_merge_refuses_drifted_updates_schema(spark):
     SK.merge_upsert_partitioned(spark, path, ok, ["job_id", "rec_id"], ["job_id"])
     got = {(r.job_id, r.rec_id): r.payload for r in spark.read.parquet(path).collect()}
     assert got[(1, 0)] == "v2-upd"
+
+
+def test_merge_accepts_non_nullable_nested_types(spark):
+    """A file read reports every nested type nullable (array containsNull,
+    map valueContainsNull, struct-field nullable), so an updates frame with
+    the table's own non-nullable element types is the same schema, not a
+    re-typing; a genuinely re-typed nested column is still refused."""
+    import pytest
+    from pyspark.sql import types as T
+
+    def schema(elem, nested):
+        return T.StructType([
+            T.StructField("job_id", T.IntegerType(), False),
+            T.StructField("rec_id", T.IntegerType(), False),
+            T.StructField("tags", T.ArrayType(elem, containsNull=False), False),
+            T.StructField("attrs", T.MapType(
+                T.StringType(), T.LongType(), valueContainsNull=False), False),
+            T.StructField("loc", T.StructType([
+                T.StructField("x", nested, False)]), False),
+        ])
+
+    sch = schema(T.StringType(), T.DoubleType())
+    path = tempfile.mkdtemp(prefix="hns_nested_")
+    rows = [(j, i, [f"t{i}"], {"k": i}, (float(i),)) for j in (0, 1) for i in range(3)]
+    SK.write_partitioned(spark.createDataFrame(rows, sch), path, ["job_id"])
+
+    upd = spark.createDataFrame([(1, 0, ["new"], {"k": 9}, (9.0,))], sch)
+    SK.merge_upsert_partitioned(spark, path, upd, ["job_id", "rec_id"], ["job_id"])
+    got = {(r.job_id, r.rec_id): list(r.tags) for r in spark.read.parquet(path).collect()}
+    assert len(got) == 6
+    assert got[(1, 0)] == ["new"] and got[(0, 0)] == ["t0"]
+
+    bad_tags = spark.createDataFrame(
+        [(1, 0, [1], {"k": 1}, (1.0,))], schema(T.IntegerType(), T.DoubleType())
+    )
+    bad_loc = spark.createDataFrame(
+        [(1, 0, ["x"], {"k": 1}, ("1",))], schema(T.StringType(), T.StringType())
+    )
+    for bad in (bad_tags, bad_loc):
+        with pytest.raises(ValueError, match="re-typed"):
+            SK.merge_upsert_partitioned(
+                spark, path, bad, ["job_id", "rec_id"], ["job_id"]
+            )
