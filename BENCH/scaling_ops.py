@@ -265,6 +265,30 @@ def _eff(a: dict, b: dict) -> float:
     return b["throughput_rows_per_sec"] / (ratio * a["throughput_rows_per_sec"])
 
 
+def config_key(r: dict) -> tuple:
+    """A state row's full measurement configuration: rows merge only when
+    every field matches (slots-only and cgroup-capped runs, other inputs or
+    other partition counts measure different things — see module
+    docstring)."""
+    return (r["job"], r["cpus"], r.get("sf_dir"), r.get("rep"),
+            r.get("partitions"), bool(r.get("pinned")))
+
+
+def merge_state(state: list[dict], fresh: list[dict]) -> dict[tuple, dict]:
+    """{config_key: row} keeping, per configuration, the fastest row of the
+    saved ``state`` and this invocation's ``fresh`` rows (host noise only
+    ever slows runs down, so per-configuration minima converge on true
+    capability). Saved rows whose configuration was not run this time are
+    carried through unchanged, so a rerun with another job, input or
+    setting never drops older evidence."""
+    best: dict[tuple, dict] = {}
+    for r in [*state, *fresh]:
+        k = config_key(r)
+        if k not in best or r["seconds"] < best[k]["seconds"]:
+            best[k] = r
+    return best
+
+
 def parent(jobs: list[str]) -> None:
     state_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "scaling_ops_state.json"
@@ -274,7 +298,7 @@ def parent(jobs: list[str]) -> None:
         with open(state_path) as f:
             state = json.load(f)
 
-    best: dict[tuple[str, int], dict] = {}
+    fresh: list[dict] = []
     for _ in range(ROUNDS):
         for job in jobs:
             for cpus in LEVELS:
@@ -283,36 +307,16 @@ def parent(jobs: list[str]) -> None:
                      os.path.abspath(__file__), "--child", job, str(cpus)],
                     capture_output=True, text=True, cwd=REPO_ROOT, check=True,
                 )
-                r = json.loads(out.stdout.strip().splitlines()[-1])
-                k = (job, cpus)
-                if k not in best or r["seconds"] < best[k]["seconds"]:
-                    best[k] = r
+                fresh.append(json.loads(out.stdout.strip().splitlines()[-1]))
 
-    # merge best-known minima for the identical workload (host noise only
-    # ever slows runs down — per-level minima converge on true capability);
-    # rows for jobs/configs NOT exercised this invocation are kept as-is so
-    # a single-job rerun never drops the other family's evidence
-    for r in state:
-        k = (r["job"], r["cpus"])
-        rep = REP_DOCS if r["job"] == "minhash" else REP_PTS
-        if k not in best:
-            best[k] = r
-            continue
-        same = (
-            r.get("sf_dir") == SF_DIR
-            and r.get("rep") == rep
-            and r.get("partitions") == PARTITIONS
-            # slots-only and cgroup-capped runs measure different things
-            # (see module docstring) — never cross-merge their minima
-            and bool(r.get("pinned")) == bool(best[k].get("pinned"))
-        )
-        if same and r["seconds"] < best[k]["seconds"]:
-            best[k] = r
+    best = merge_state(state, fresh)
     with open(state_path, "w") as f:
         json.dump(list(best.values()), f)
 
+    # report this invocation's configurations, with their best-known minima
+    current = {(r["job"], r["cpus"]): best[config_key(r)] for r in fresh}
     for job in jobs:
-        by_cpus = {c: best[(job, c)] for c in LEVELS if (job, c) in best}
+        by_cpus = {c: current[(job, c)] for c in LEVELS if (job, c) in current}
         effs = {
             f"{a}->{b}": round(_eff(by_cpus[a], by_cpus[b]), 3)
             for a in by_cpus

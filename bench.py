@@ -66,6 +66,24 @@ def _spin(n: int) -> int:
     return x
 
 
+def host_cpus() -> str:
+    """CPUs this process may run on (what ``nproc`` counts, ignoring
+    OMP_NUM_THREADS) — the default local[N]."""
+    return str(len(os.sched_getaffinity(0)))
+
+
+def host_mem_total_kb() -> int:
+    with open("/proc/meminfo") as f:
+        return next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+
+
+def host_driver_mem() -> str:
+    """Default heap of the single local-mode JVM: half of MemTotal, in
+    whole GiB, at least 1g — the rest stays for Python workers and the
+    page cache."""
+    return f"{max(1, host_mem_total_kb() // 2 // (1 << 20))}g"
+
+
 def host_calibration(cpus: str) -> dict:
     """Raw-CPU speed of the box at measurement time (no Spark).
 
@@ -97,9 +115,9 @@ def host_calibration(cpus: str) -> dict:
 
 def run_bench(sf_dir: str, cpus: str) -> dict:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    # bench runs on the sandbox host: give the single local-mode JVM the big
-    # heap here rather than baking it into the library default (session.py)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # size the single local-mode JVM's heap to the host here rather than
+    # baking it into the library default (session.py)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", host_driver_mem())
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
@@ -215,6 +233,9 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
                 round(n_input_points / t_flag, 1) if t_flag else 0.0
             ),
             "cpus": cpus,
+            "driver_mem": os.environ["SPARK_GRAFT_DRIVER_MEM"],
+            "host_nproc": int(host_cpus()),
+            "host_mem_total_kb": host_mem_total_kb(),
         }
     finally:
         spark.stop()
@@ -222,7 +243,7 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_cpus()
     # calibrate the bare host BEFORE the JVM exists, so the number is the
     # box itself, not the box minus a running Spark session
     calibration = host_calibration(cpus)

@@ -24,7 +24,14 @@ files so that spatially close cells land in the same parquet row groups —
 min/max pruning then behaves like a coarse spatial index).
 
 Everything here is vectorized numpy; the Spark-facing column builders are in
-this module too so the grid has exactly one definition.
+this module too so the grid has exactly one definition. Each Spark builder
+is a single SQL parse: the ``*_expr`` functions return Spark-SQL text and
+the ``*_col`` functions one ``F.expr`` over it, so building a column costs
+no per-operator py4j round trips. :func:`cell_col` and the DuckDB oracle's
+:func:`cell_sql` spell the same arithmetic and differ only in literal
+typing (Spark needs ``180.0D``/``…L``, where an untyped ``180.0`` would
+parse as DECIMAL); they are kept as two strings so the oracle stays
+independent of the engine.
 
 Approx cell edge sizes (lat direction): r=7 → ~156 km, r=10 → ~19.5 km,
 r=13 → ~2.4 km, r=16 → ~0.3 km.
@@ -202,67 +209,76 @@ def morton_key(cell: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # Spark column / SQL builders — the SAME arithmetic, JVM-side
 # ---------------------------------------------------------------------------
+#
+# Arguments are column names or Spark-SQL text. Every literal is typed
+# (``180.0D``, ``…L``): Spark parses an untyped ``180.0`` as DECIMAL, which
+# would change the arithmetic.
 
-def ix_col(lon: Column | str, res: int) -> Column:
-    """Clamped x grid index of a longitude column — THE index expression
-    (cell_col and the segment bbox cover both build on it; the grid keeps
-    exactly one definition, like pack_col for the id packing)."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
+
+def ix_expr(lon: str, res: int) -> str:
+    """Clamped x grid index of a longitude (Spark-SQL text) — THE index
+    expression (cell ids, the segment bbox cover and the kNN ring bound all
+    build on it; the grid keeps exactly one definition, like
+    :func:`pack_expr` for the id packing)."""
     n = 1 << res
-    return F.least(
-        F.greatest(
-            F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))),
-            F.lit(0),
-        ),
-        F.lit(n - 1),
-    ).cast("long")
+    return f"LEAST(GREATEST(FLOOR(({lon} + 180.0D) / 360.0D * {n}.0D), 0L), {n - 1}L)"
 
 
-def iy_col(lat: Column | str, res: int) -> Column:
-    """Clamped y grid index of a latitude column (see :func:`ix_col`)."""
-    lat = F.col(lat) if isinstance(lat, str) else lat
+def iy_expr(lat: str, res: int) -> str:
+    """Clamped y grid index of a latitude (see :func:`ix_expr`)."""
     n = 1 << res
-    return F.least(
-        F.greatest(
-            F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))),
-            F.lit(0),
-        ),
-        F.lit(n - 1),
-    ).cast("long")
+    return f"LEAST(GREATEST(FLOOR(({lat} + 90.0D) / 180.0D * {n}.0D), 0L), {n - 1}L)"
 
 
-def cell_col(lon: Column | str, lat: Column | str, res: int) -> Column:
-    """Cell id as a pure Catalyst column expression (whole-stage codegen).
-
-    No UDF: the billion-row point-encode path never touches Python.
-    """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
-    return pack_col(res, ix_col(lon, res), iy_col(lat, res))
-
-
-def pack_col(res: int, ix: Column, iy: Column) -> Column:
-    """Column-side cell-id packing — the Catalyst twin of :func:`pack`.
+def pack_expr(res: int, ix: str, iy: str) -> str:
+    """Cell-id packing as Spark-SQL text — the twin of :func:`pack`.
     Operators that rebuild cell ids from index arithmetic (k-ring
     expansion, segment bbox covers) MUST use this so the grid keeps
     exactly one id definition across numpy, Spark and SQL."""
     return (
-        F.lit(int(res)).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-        + ix.cast("long") * F.lit(1 << _IX_SHIFT).cast("long")
-        + iy.cast("long")
+        f"({int(res)}L * {1 << _RES_SHIFT}L"
+        f" + CAST({ix} AS BIGINT) * {1 << _IX_SHIFT}L + CAST({iy} AS BIGINT))"
     )
 
 
-def cell_ix_col(cell: Column | str) -> Column:
+def cell_expr(lon: str, lat: str, res: int) -> str:
+    """Cell id of a (lon, lat) pair as Spark-SQL text."""
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    return pack_expr(res, ix_expr(lon, res), iy_expr(lat, res))
+
+
+def ix_col(lon: str, res: int) -> Column:
+    """Column of :func:`ix_expr`."""
+    return F.expr(ix_expr(lon, res))
+
+
+def iy_col(lat: str, res: int) -> Column:
+    """Column of :func:`iy_expr`."""
+    return F.expr(iy_expr(lat, res))
+
+
+def cell_col(lon: str, lat: str, res: int) -> Column:
+    """Cell id as one Catalyst expression (whole-stage codegen).
+
+    No UDF: the billion-row point-encode path never touches Python.
+    """
+    return F.expr(cell_expr(lon, lat, res))
+
+
+def pack_col(res: int, ix: str, iy: str) -> Column:
+    """Column of :func:`pack_expr`."""
+    return F.expr(pack_expr(res, ix, iy))
+
+
+def cell_ix_col(cell: str) -> Column:
     """Column-side :func:`cell_ix` (x index from a packed id)."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    return F.shiftright(cell, _IX_SHIFT) % F.lit(1 << (_RES_SHIFT - _IX_SHIFT))
+    return F.expr(f"(shiftright({cell}, {_IX_SHIFT}) % {1 << (_RES_SHIFT - _IX_SHIFT)}L)")
 
 
-def cell_iy_col(cell: Column | str) -> Column:
+def cell_iy_col(cell: str) -> Column:
     """Column-side :func:`cell_iy` (y index from a packed id)."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    return cell % F.lit(1 << _IX_SHIFT)
+    return F.expr(f"({cell} % {1 << _IX_SHIFT}L)")
 
 
 def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:

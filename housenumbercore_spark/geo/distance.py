@@ -7,7 +7,7 @@ PL/pgSQL equirectangular approximation with R=6371000 m:
     (angles in radians)
 
 Exposed three ways so every consumer uses the same formula:
-- :func:`distance_m_col`   Catalyst column expression (JVM, codegen)
+- :func:`distance_m_col`   one Catalyst expression (JVM, codegen)
 - :func:`distance_m_sql`   ANSI-SQL string (DuckDB oracle)
 - :func:`distance_m_np`    vectorized numpy (refine UDFs, tests)
 """
@@ -21,10 +21,13 @@ from pyspark.sql import functions as F
 EARTH_RADIUS_M = 6371000.0
 
 
-def distance_m_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
-    x = (F.radians(lon2) - F.radians(lon1)) * F.cos((F.radians(lat1) + F.radians(lat2)) / 2)
-    y = F.radians(lat2) - F.radians(lat1)
-    return F.sqrt(x * x + y * y) * F.lit(EARTH_RADIUS_M)
+def distance_m_col(lon1: str, lat1: str, lon2: str, lat2: str) -> Column:
+    """One F.expr over column names or Spark-SQL text. Squares are spelled
+    ``x * x`` as in :func:`distance_m_np`, not with :func:`distance_m_sql`'s
+    POW, which may round differently and so move ``dist_m`` ties."""
+    x = f"((RADIANS({lon2}) - RADIANS({lon1})) * COS((RADIANS({lat1}) + RADIANS({lat2})) / 2))"
+    y = f"(RADIANS({lat2}) - RADIANS({lat1}))"
+    return F.expr(f"SQRT({x} * {x} + {y} * {y}) * {EARTH_RADIUS_M!r}D")
 
 
 def distance_m_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:

@@ -6,10 +6,15 @@ theoreticalhousenumbercore/util/Workcache_Entry.java:724-791); the graft's
 north rule adds geometric nearest-street matching. Design:
 
 1. targets (streets) are replicated to every cell of the k-ring around
-   their own cell — build side ~ (2k+1)² × n_targets narrow rows, broadcast;
-2. points encode their cell with pure column arithmetic and equi-join;
+   their own cell — build side ~ (2k+1)² × n_targets narrow rows, broadcast.
+   The ring is generated inside the plan: grid indices once per target,
+   then two ``explode(sequence(-k, k))`` with a pole filter and a ``pmod``
+   lon wrap — no driver-built offsets frame and no cross join;
+2. points encode their cell with one codegen expression and equi-join;
 3. per-candidate distance is the reference's equirectangular formula
-   (dbfunctions.sql:28-50) as a codegen column expression;
+   (dbfunctions.sql:28-50) as one codegen expression. Grid, distance and
+   guarantee columns are each a single Spark-SQL parse (``F.expr``), so a
+   ladder round costs one plan and no per-operator py4j round trips;
 4. rank 1 per point by (distance, target_id) — deterministic ties.
 
 Exactness contract: the ring-k result equals the global nearest neighbour
@@ -28,6 +33,7 @@ from pyspark.sql import Window as W
 
 from ..geo import cells as C
 from ..geo.distance import EARTH_RADIUS_M, distance_m_col
+from ..obs import job_description
 from ..pinning import pin
 
 
@@ -36,40 +42,40 @@ from ..pinning import pin
 from .argmin import has_unorderable_col as _has_unorderable_col
 
 
-def _ring_offsets_df(spark, k: int):
-    offs = [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
-    return spark.createDataFrame(offs, "dx long, dy long")
+def _q(name: str) -> str:
+    """Backtick-quote a column name for Spark-SQL text."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def expand_targets_to_ring(
     targets: DataFrame, res: int, k: int = 1, lon: str = "slon", lat: str = "slat"
 ) -> DataFrame:
-    """Replicate each target row to all cells of its k-ring (column-arithmetic
-    ring: lon wraps; lat offsets running past a pole are FILTERED rather than
-    clamped — the same covered-cell set as geo.cells.k_ring's clamp+dedup,
-    but duplicate-free by construction, so the ring dim needs no
-    dropDuplicates shuffle before broadcasting)."""
-    spark = targets.sparkSession
+    """Replicate each target row to all cells of its k-ring, adding a
+    ``cell`` column. One plan of codegen expressions, no driver-built
+    frame: the grid indices ``__ix``/``__iy`` are computed once, two
+    ``explode(sequence(-k, k))`` generate the offsets, latitude offsets
+    running past a pole are FILTERED rather than clamped, and longitude
+    wraps with ``pmod``. That is the covered-cell set of geo.cells.k_ring
+    (clamp + dedup), but duplicate-free by construction, so the ring dim
+    needs no dropDuplicates shuffle before broadcasting — except at a
+    degenerate res (``2^res <= 2k+1``), where the lon wrap aliases cells."""
     n = 1 << res
-    t = targets.withColumn("__c", C.cell_col(lon, lat, res))
-    # integer unpack/repack through the grid's single definition
-    ix = C.cell_ix_col("__c")
-    iy = C.cell_iy_col("__c")
-    offs = F.broadcast(_ring_offsets_df(spark, k))
-    expanded = (
-        t.crossJoin(offs)
-        .filter((iy + F.col("dy") >= 0) & (iy + F.col("dy") <= n - 1))
-        .select(
-            "*",
-            C.pack_col(
-                res, F.pmod(ix + F.col("dx"), F.lit(n)), iy + F.col("dy")
-            ).alias("cell"),
+    keep = [_q(c) for c in targets.columns]
+    ring = (
+        targets.selectExpr(
+            "*", f"{C.ix_expr(lon, res)} AS __ix", f"{C.iy_expr(lat, res)} AS __iy"
+        )
+        .selectExpr("*", f"explode(sequence({-k}, {k})) AS __dy")
+        .where(f"__iy + __dy BETWEEN 0 AND {n - 1}")
+        .selectExpr("*", f"explode(sequence({-k}, {k})) AS __dx")
+        .selectExpr(
+            *keep,
+            f"{C.pack_expr(res, f'pmod(__ix + __dx, {n}L)', '__iy + __dy')} AS cell",
         )
     )
-    out = expanded.drop("__c", "dx", "dy")
-    if n <= 2 * k + 1:  # lon wrap can alias cells only at degenerate res
-        out = out.dropDuplicates(out.columns)
-    return out
+    if n <= 2 * k + 1:
+        ring = ring.dropDuplicates(ring.columns)
+    return ring
 
 
 #: plan-statistics size (bytes) above which the 'auto' strategy stops
@@ -143,7 +149,7 @@ def knn_nearest(
     else:
         raise ValueError(f"unknown dim_strategy {dim_strategy!r}")
     cand = cand.withColumn(
-        "dist_m", distance_m_col(F.col(lon), F.col(lat), F.col(tlon), F.col(tlat))
+        "dist_m", distance_m_col(lon, lat, tlon, tlat)
     )
     if n_neighbors == 1 and not _has_unorderable_col(cand.schema):
         # argmin as a hash aggregate: min(struct(dist, id, payload...)) is
@@ -154,15 +160,14 @@ def knn_nearest(
         # is unique, so later fields never decide the min. The window path
         # below shuffles + sorts all candidates — only needed for k > 1.
         others = [c for c in cand.columns if c != point_id]
+        fields = ["dist_m", target_id] + [c for c in others if c not in ("dist_m", target_id)]
         best = cand.groupBy(point_id).agg(
-            F.min(F.struct("dist_m", target_id, *[c for c in others
-                                                  if c not in ("dist_m", target_id)])
-                  ).alias("__best")
+            F.expr(f"min(struct({', '.join(map(_q, fields))})) AS __best")
         )
-        return best.select(
-            point_id,
-            *[F.col(f"__best.{c}").alias(c) for c in others],
-            F.lit(1).alias("knn_rank"),
+        return best.selectExpr(
+            _q(point_id),
+            *[f"__best.{_q(c)} AS {_q(c)}" for c in others],
+            "1 AS knn_rank",
         )
     # k > 1, or a target payload column with an unorderable type (e.g. a
     # MapType tag column): rank through a window, which only ORDERS BY
@@ -191,21 +196,26 @@ def ring_guarantee_m(
       |φ| + g_lat/2, so d ≥ R·rad(g_lon)·cos(|φ| + g_lat/2).
 
     A 0.9999 factor absorbs float rounding. If the best in-ring candidate is
-    STRICTLY closer than this bound, it is provably the global nearest."""
+    STRICTLY closer than this bound, it is provably the global nearest.
+
+    One F.expr: the grid indices come from THE single definition
+    (cells.ix_expr/iy_expr), so this bound can never drift from the join's
+    actual cell assignment."""
     n = 1 << res
     cw, ch = 360.0 / n, 180.0 / n
-    lo, la = F.col(lon), F.col(lat)
-    # grid indices come from THE single definition (cells.ix_col/iy_col) so
-    # this bound can never drift from the join's actual cell assignment;
-    # bit-identical to the former inline floor((lo+180)/cw) because n is a
-    # power of two (scaling by 2^r commutes with IEEE rounding)
-    ix, iy = C.ix_col(lo, res), C.iy_col(la, res)
-    g_lon = F.least(lo - ((ix - k) * cw - 180.0), ((ix + 1 + k) * cw - 180.0) - lo)
-    g_lat = F.least(la - ((iy - k) * ch - 90.0), ((iy + 1 + k) * ch - 90.0) - la)
-    cos_m = F.cos(F.radians(F.abs(la) + g_lat / 2))
-    return (
-        F.least(F.radians(g_lat), F.radians(g_lon) * cos_m)
-        * F.lit(EARTH_RADIUS_M * 0.9999)
+    ix, iy = C.ix_expr(lon, res), C.iy_expr(lat, res)
+    g_lon = (
+        f"LEAST({lon} - (({ix} - {k}) * {cw!r}D - 180.0D),"
+        f" (({ix} + 1 + {k}) * {cw!r}D - 180.0D) - {lon})"
+    )
+    g_lat = (
+        f"LEAST({lat} - (({iy} - {k}) * {ch!r}D - 90.0D),"
+        f" (({iy} + 1 + {k}) * {ch!r}D - 90.0D) - {lat})"
+    )
+    cos_m = f"COS(RADIANS(ABS({lat}) + {g_lat} / 2))"
+    return F.expr(
+        f"LEAST(RADIANS({g_lat}), RADIANS({g_lon}) * {cos_m})"
+        f" * {EARTH_RADIUS_M * 0.9999!r}D"
     )
 
 
@@ -255,7 +265,8 @@ def knn_nearest_multires(
     On a multi-executor cluster where executor loss must not restart the
     job, run with the ``reliable`` pin strategy (pinning.py) so each
     round checkpoints to durable storage."""
-    cores = points.sparkSession.sparkContext.defaultParallelism
+    sc = points.sparkSession.sparkContext
+    cores = sc.defaultParallelism
     remaining = points.repartition(cores)  # decouple from input file count
     # Round collapse needs the live point count: a point whose ring holds
     # NO candidate emits zero rows from knn_nearest, so "no unsure rows"
@@ -267,56 +278,56 @@ def knn_nearest_multires(
     n_remaining = remaining.count() if len(res_list) > 1 else 0
     out: DataFrame | None = None
     for i, res in enumerate(res_list):
-        last = i == len(res_list) - 1
-        ranked = knn_nearest(
-            remaining, targets, res, k_ring, n_neighbors,
-            point_id=point_id, target_id=target_id,
-            lon=lon, lat=lat, tlon=tlon, tlat=tlat,
-            dim_strategy=dim_strategy, n_salt=n_salt,
-        )
-        if not last:
-            g = ring_guarantee_m(res, k_ring, lon, lat)
-            if n_neighbors == 1:
-                # one row per point already (argmin aggregate): the bound
-                # check is a plain projection, no window
-                flags = pin(
-                    ranked.withColumn("__sure", F.col("dist_m") < g),
-                    eager=False,
-                    truncate=True,
-                )
-                drop_cols = ["__sure"]
-            else:
-                wcnt = W.partitionBy(point_id)
-                flags = pin(
-                    ranked.withColumn("__worst", F.max("dist_m").over(wcnt))
-                    .withColumn("__cnt", F.count(F.lit(1)).over(wcnt))
-                    .withColumn(
-                        "__sure",
-                        (F.col("__cnt") == n_neighbors) & (F.col("__worst") < g),
-                    ),
-                    eager=False,
-                    truncate=True,
-                )
-                drop_cols = ["__worst", "__cnt", "__sure"]
-            accepted = flags.filter(F.col("__sure")).drop(*drop_cols)
-            out = accepted if out is None else out.unionByName(accepted)
-            # __sure is constant across a point's rows (one row per point
-            # at n=1; exactly n_neighbors rows per sure point at n>1, the
-            # __cnt == n_neighbors guard), so the sure POINT count falls
-            # out of the sure ROW count on the checkpointed blocks. Only
-            # when it equals the live point count is every point answered
-            # — a point whose ring held no candidate has NO rows here and
-            # must still escalate to the coarser fallback rounds.
-            n_sure = flags.filter(F.col("__sure")).count() // max(n_neighbors, 1)
-            n_remaining -= n_sure
-            if n_remaining == 0:
-                return out
-            remaining = remaining.join(
-                flags.filter(F.col("__sure")).select(point_id).dropDuplicates(),
-                point_id,
-                "left_anti",
+        with job_description(sc, f"knn round res={res} k={k_ring}"):
+            last = i == len(res_list) - 1
+            ranked = knn_nearest(
+                remaining, targets, res, k_ring, n_neighbors,
+                point_id=point_id, target_id=target_id,
+                lon=lon, lat=lat, tlon=tlon, tlat=tlat,
+                dim_strategy=dim_strategy, n_salt=n_salt,
             )
-        else:
-            accepted = ranked
-            out = accepted if out is None else out.unionByName(accepted)
+            if not last:
+                g = ring_guarantee_m(res, k_ring, lon, lat)
+                if n_neighbors == 1:
+                    # one row per point already (argmin aggregate): the bound
+                    # check is a plain projection, no window
+                    flags = pin(
+                        ranked.withColumn("__sure", F.col("dist_m") < g),
+                        eager=False,
+                        truncate=True,
+                    )
+                    drop_cols = ["__sure"]
+                else:
+                    wcnt = W.partitionBy(point_id)
+                    flags = pin(
+                        ranked.withColumn("__worst", F.max("dist_m").over(wcnt))
+                        .withColumn("__cnt", F.count(F.lit(1)).over(wcnt))
+                        .withColumn(
+                            "__sure",
+                            (F.col("__cnt") == n_neighbors) & (F.col("__worst") < g),
+                        ),
+                        eager=False,
+                        truncate=True,
+                    )
+                    drop_cols = ["__worst", "__cnt", "__sure"]
+                accepted = flags.filter(F.col("__sure")).drop(*drop_cols)
+                out = accepted if out is None else out.unionByName(accepted)
+                # __sure is constant across a point's rows (one row per point
+                # at n=1; exactly n_neighbors rows per sure point at n>1, the
+                # __cnt == n_neighbors guard), so the sure POINT count falls
+                # out of the sure ROW count on the checkpointed blocks. Only
+                # when it equals the live point count is every point answered
+                # — a point whose ring held no candidate has NO rows here and
+                # must still escalate to the coarser fallback rounds.
+                n_sure = flags.filter(F.col("__sure")).count() // max(n_neighbors, 1)
+                n_remaining -= n_sure
+                if n_remaining == 0:
+                    return out
+                remaining = remaining.join(
+                    flags.filter(F.col("__sure")).select(point_id).dropDuplicates(),
+                    point_id,
+                    "left_anti",
+                )
+            else:
+                out = ranked if out is None else out.unionByName(ranked)
     return out

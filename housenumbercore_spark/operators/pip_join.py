@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 from ..checkpoint import digest_aggs, row_digest_col
 from ..geo import cells as C
 from ..geo import geometry as G
+from ..obs import job_description
 from ..pinning import pin
 
 # dunder-reserved refine-payload columns produced by cover_cells and
@@ -243,15 +244,10 @@ def _memo_cover(
             return res, dim
         for k in [k for k in _COVER_MEMO if k[0] != app]:
             del _COVER_MEMO[k]
-        # the build's jobs say what they are in the event log; nested
-        # under the caller's own description when it has one
-        prev = sc.getLocalProperty("spark.job.description")
+        # the build's jobs say what they are in the event log
         desc = f"cover build: pip_join.cover_cells res={res} digest={st.n}:{st.d}:{st.s}"
-        sc.setJobDescription(f"{prev} / {desc}" if prev else desc)
-        try:
+        with job_description(sc, desc):
             dim = pin(_cover_plan(areas, res, id_col, wkb_col), truncate=True)
-        finally:
-            sc.setLocalProperty("spark.job.description", prev)
         _COVER_MEMO[key] = dim
         while len(_COVER_MEMO) > _COVER_MEMO_SIZE:
             _COVER_MEMO.popitem(last=False)
@@ -450,17 +446,16 @@ def seg_cover_cells_cols(
     """Explode each segment row to the grid cells covering its bbox —
     pure column arithmetic + two sequence-explodes, zero Python. Superset
     cover: the exact refine downstream discards false candidates. Index
-    arithmetic is the grid's single definition (cells.ix_col/iy_col), so
+    arithmetic is the grid's single definition (cells.ix_expr/iy_expr), so
     the cover can never drift from the point encodes it equi-joins
     against."""
-    lo_x = C.ix_col(F.least(F.col(x0), F.col(x1)), res)
-    hi_x = C.ix_col(F.greatest(F.col(x0), F.col(x1)), res)
-    lo_y = C.iy_col(F.least(F.col(y0), F.col(y1)), res)
-    hi_y = C.iy_col(F.greatest(F.col(y0), F.col(y1)), res)
-    d = df.withColumn("__gx", F.explode(F.sequence(lo_x, hi_x)))
-    d = d.withColumn("__gy", F.explode(F.sequence(lo_y, hi_y)))
-    cell = C.pack_col(res, F.col("__gx"), F.col("__gy"))
-    return d.withColumn(out, cell).drop("__gx", "__gy")
+    lo_x = C.ix_expr(f"LEAST({x0}, {x1})", res)
+    hi_x = C.ix_expr(f"GREATEST({x0}, {x1})", res)
+    lo_y = C.iy_expr(f"LEAST({y0}, {y1})", res)
+    hi_y = C.iy_expr(f"GREATEST({y0}, {y1})", res)
+    d = df.withColumn("__gx", F.expr(f"explode(sequence({lo_x}, {hi_x}))"))
+    d = d.withColumn("__gy", F.expr(f"explode(sequence({lo_y}, {hi_y}))"))
+    return d.withColumn(out, C.pack_col(res, "__gx", "__gy")).drop("__gx", "__gy")
 
 
 def assign_points_to_areas(

@@ -132,7 +132,6 @@ def test_pack_col_matches_numpy(spark):
     bit-identical to the numpy kernel — the ring-expansion and segment-
     cover joins rebuild cell ids through these helpers."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     rng = np.random.default_rng(7)
     res = 13
@@ -142,7 +141,7 @@ def test_pack_col_matches_numpy(spark):
     df = spark.createDataFrame(pd.DataFrame({"ix": ix, "iy": iy}))
     got = (
         df.select(
-            cells.pack_col(res, F.col("ix"), F.col("iy")).alias("c")
+            cells.pack_col(res, "ix", "iy").alias("c")
         )
         .toPandas()["c"]
         .to_numpy()

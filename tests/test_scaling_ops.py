@@ -88,3 +88,29 @@ def test_knn_job_answers_every_replicated_point(spark, sops):
     base_pts = S.points_df(spark, SF_SMALL).count()
     # multires ladder ends in a whole-domain fallback: every point answered
     assert rows == sops.REP_PTS * base_pts
+
+
+def test_state_merge_keys_by_full_config():
+    """A rerun under another configuration keeps the older rows: only rows
+    whose (job, cpus, sf_dir, rep, partitions, pinned) all match compete
+    for the minimum; every other saved row is carried through unchanged."""
+    sops = _load_scaling_ops()
+    base = {"job": "knn", "cpus": 2, "sf_dir": "/a", "rep": 96,
+            "partitions": 16, "pinned": True}
+    old_same = {**base, "seconds": 10.0}
+    old_other = [
+        {**base, "sf_dir": "/b", "seconds": 5.0},
+        {**base, "rep": 192, "seconds": 6.0},
+        {**base, "partitions": 32, "seconds": 7.0},
+        {**base, "pinned": False, "seconds": 8.0},
+        {**base, "job": "minhash", "seconds": 9.0},
+    ]
+    fresh = [{**base, "seconds": 12.0}, {**base, "seconds": 11.0}]
+    merged = sops.merge_state([old_same, *old_other], fresh)
+    assert merged[sops.config_key(base)] is old_same  # faster saved row wins
+    rows = list(merged.values())
+    assert len(rows) == 6
+    for r in old_other:
+        assert r in rows
+    faster = [{**base, "seconds": 3.0}]
+    assert sops.merge_state([old_same, *old_other], faster)[sops.config_key(base)] is faster[0]

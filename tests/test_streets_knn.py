@@ -87,7 +87,7 @@ def test_knn_shuffle_path_vs_oracle(spark, con):
         df = P.knn_nearest_street(spark, SF, k=1, dim_strategy="shuffle")
         plan = df._jdf.queryExecution().executedPlan().toString()
         # candidate join must be a shuffled equi-join — never a cartesian
-        # product; the only broadcast left is the 9-row ring-offsets dim
+        # product
         assert "CartesianProduct" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         got = df.toPandas()
@@ -266,9 +266,7 @@ def test_multires_matches_brute_force_on_random_worlds(spark):
             pts.crossJoin(targets)
             .withColumn(
                 "dist_m",
-                distance_m_col(
-                    F.col("lon"), F.col("lat"), F.col("slon"), F.col("slat")
-                ),
+                distance_m_col("lon", "lat", "slon", "slat"),
             )
             .withColumn(
                 "knn_rank",
@@ -285,3 +283,158 @@ def test_multires_matches_brute_force_on_random_worlds(spark):
             for r in brute.collect()
         }
         assert got == want, f"round {round_i}: multires != brute force"
+
+
+def _ring_targets(spark):
+    """Random targets plus the poles and the antimeridian (lat ±90, lon
+    ±180 and their neighbours just inside)."""
+    import numpy as np
+
+    rng = np.random.default_rng(20261017)
+    lon = np.concatenate([rng.uniform(-180, 180, 300),
+                          [-180.0, 180.0, 180.0, -180.0, 0.0, 179.999999, -179.999999]])
+    lat = np.concatenate([rng.uniform(-90, 90, 300),
+                          [90.0, -90.0, 0.0, 45.0, 89.999999, -89.999999, 90.0]])
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    return lon, lat, spark.createDataFrame(rows, "street_key long, slon double, slat double")
+
+
+@pytest.mark.parametrize("res", [0, 1, 2, 8, 14])
+def test_ring_expansion_matches_numpy_k_ring(spark, res):
+    """The in-plan ring (two sequence explodes, pole filter, pmod lon
+    wrap) gives each target exactly the cell set of the numpy kernel
+    cells.k_ring: k_ring clamps past-pole offsets onto cells already in the
+    ring, the Spark ring filters them, so the sets agree and the Spark ring
+    holds each cell once."""
+    from collections import defaultdict
+
+    from housenumbercore_spark.geo import cells as C
+    from housenumbercore_spark.operators import knn as KN
+
+    lon, lat, targets = _ring_targets(spark)
+    for k in (1, 2):
+        got = defaultdict(list)
+        for r in KN.expand_targets_to_ring(targets, res, k).collect():
+            got[r.street_key].append(r.cell)
+        want = C.k_ring(C.encode_cells(lon, lat, res), k)
+        assert set(got) == set(range(len(lon)))
+        for i, ring in enumerate(want):
+            assert sorted(got[i]) == sorted(set(ring.tolist())), (res, k, i)
+
+
+@pytest.mark.parametrize("res", [0, 2, 8, 14, 20, 26])
+def test_ring_guarantee_matches_numpy(spark, res):
+    """ring_guarantee_m equals an independent numpy recomputation bit for
+    bit. The cosine is the one transcendental whose last bit the JVM and
+    numpy may round differently, so the numpy-computed cosine argument is
+    sent through Spark's COS; everything else is numpy."""
+    import numpy as np
+    import pandas as pd
+
+    from housenumbercore_spark.geo.distance import EARTH_RADIUS_M
+    from housenumbercore_spark.operators import knn as KN
+
+    lon, lat, targets = _ring_targets(spark)
+    pts = targets.withColumnRenamed("slon", "lon").withColumnRenamed("slat", "lat")
+    n = 1 << res
+    cw, ch = 360.0 / n, 180.0 / n
+    ix = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1)
+    iy = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, n - 1)
+    for k in (1, 2):
+        got = (
+            pts.select("street_key", KN.ring_guarantee_m(res, k).alias("g"))
+            .toPandas().sort_values("street_key")["g"].to_numpy()
+        )
+        g_lon = np.minimum(lon - ((ix - k) * cw - 180.0), ((ix + 1 + k) * cw - 180.0) - lon)
+        g_lat = np.minimum(lat - ((iy - k) * ch - 90.0), ((iy + 1 + k) * ch - 90.0) - lat)
+        arg = np.radians(np.abs(lat) + g_lat / 2)
+        cos_m = (
+            spark.createDataFrame(pd.DataFrame({"i": np.arange(len(arg)), "a": arg}))
+            .selectExpr("i", "COS(a) AS c").toPandas().sort_values("i")["c"].to_numpy()
+        )
+        assert np.allclose(cos_m, np.cos(arg), rtol=1e-15, atol=0)
+        want = np.minimum(np.radians(g_lat), np.radians(g_lon) * cos_m) * (EARTH_RADIUS_M * 0.9999)
+        assert (got.view(np.int64) == want.view(np.int64)).all(), (res, k)
+
+
+def _two_round_world(spark):
+    """Range-backed (no local relation) points and targets: the points near
+    lat 50.0 are answered at res 12, the rest have an empty res-12 ring and
+    fall through to the res-2 round."""
+    pts = spark.range(200).selectExpr(
+        "id AS point_id", "6.0D + (id % 20) * 0.01D AS lon", "50.0D + (id DIV 20) * 0.02D AS lat"
+    )
+    targets = spark.range(10).selectExpr(
+        "id AS street_key", "concat('s', id) AS name", "6.0D + id * 0.02D AS slon", "50.0D AS slat"
+    )
+    return pts, targets
+
+
+def test_knn_plan_has_no_cross_join_or_local_relation(spark):
+    """The ring dim is built inside the plan: no driver-built offsets frame
+    (LocalTableScan) and no nested-loop or cartesian join against it."""
+    from housenumbercore_spark.operators import knn as KN
+
+    pts, targets = _two_round_world(spark)
+    df = KN.knn_nearest(pts, targets, res=12)
+    assert df.collect()  # execute THIS plan so AQE finalizes it
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    for op in ("BroadcastNestedLoopJoin", "CartesianProduct", "LocalTableScan"):
+        assert op not in plan, (op, plan)
+
+
+#: jobs that knn_nearest_multires plus a collect of its result run on
+#: _two_round_world under the 'local' pin strategy (both rounds execute);
+#: measured, and the same on every repeat
+MULTIRES_TWO_ROUND_JOBS = 14
+
+
+def test_multires_job_count_and_round_descriptions(spark, monkeypatch):
+    """A two-round ladder runs at most the measured number of Spark jobs
+    (a statusTracker job group counts them), describes each round as
+    ``knn round res=<r> k=<k>`` under the caller's description, and puts
+    the caller's description back afterwards."""
+    from conftest import forced_pin_strategy
+
+    from housenumbercore_spark import obs
+    from housenumbercore_spark.operators import knn as KN
+
+    seen = []
+
+    def recording(sc, text):
+        seen.append((sc.getLocalProperty("spark.job.description"), text))
+        return obs.job_description(sc, text)
+
+    monkeypatch.setattr(KN, "job_description", recording)
+    sc = spark.sparkContext
+    pts, targets = _two_round_world(spark)
+    group = "knn-two-round-jobs"
+    with forced_pin_strategy(spark, "local"):
+        sc.setJobGroup(group, "caller")
+        try:
+            rows = KN.knn_nearest_multires(pts, targets, res_list=[12, 2]).collect()
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    assert sorted(r.point_id for r in rows) == list(range(200))
+    assert seen == [("caller", "knn round res=12 k=1"), ("caller", "knn round res=2 k=1")]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= MULTIRES_TWO_ROUND_JOBS, len(jobs)
+
+
+def test_job_description_nests_and_restores(spark):
+    from housenumbercore_spark.obs import job_description
+
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    assert sc.getLocalProperty(key) is None
+    with job_description(sc, "outer"):
+        assert sc.getLocalProperty(key) == "outer"
+        with pytest.raises(RuntimeError):
+            with job_description(sc, "inner"):
+                assert sc.getLocalProperty(key) == "outer / inner"
+                raise RuntimeError("body failed")
+        assert sc.getLocalProperty(key) == "outer"
+    assert sc.getLocalProperty(key) is None
